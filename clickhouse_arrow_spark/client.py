@@ -294,7 +294,10 @@ class Client:
         unless `allow_hash_substitution=True` (xxhash64, different
         values, warned)."""
         from clickhouse_arrow_spark.ddl import rewrite_final
-        from clickhouse_arrow_spark.dialect import translate_ch_sql
+        from clickhouse_arrow_spark.dialect import (
+            session_dialect_settings,
+            translate_ch_sql,
+        )
 
         from clickhouse_arrow_spark.dialect import extract_with_fill
         from clickhouse_arrow_spark.dictionary import rewrite_dict_calls
@@ -754,47 +757,12 @@ class Client:
 
             ch_sql = rewrite_star_apply(self.spark, ch_sql)
         ch_sql, fill = extract_with_fill(ch_sql)
-        # session-scoped SET splitby_max_substrings_includes_remaining_
-        # string = 1 (legacy remainder-in-last splitBy*) lands in the
-        # shim's namespaced conf; surface it to the dialect for this
-        # statement (a SETTINGS tail on the statement still overrides)
-        _split_mode = self.spark.conf.get(
-            "spark.clickhouse_arrow_spark.setting."
-            "splitby_max_substrings_includes_remaining_string",
-            "0",
+        # session-scoped SET of the dialect's honored settings (the
+        # shim's namespaced conf); a SETTINGS tail still overrides
+        sql = translate_ch_sql(
+            ch_sql, allow_hash_substitution,
+            session_dialect_settings(self.spark.conf.get),
         )
-        if str(_split_mode).lower() in ("1", "true"):
-            from clickhouse_arrow_spark.dialect import (
-                set_splitby_includes_remaining,
-            )
-
-            set_splitby_includes_remaining(True)
-        # session-scoped SET formatdatetime_parsedatetime_m_is_month_
-        # name = 0 (legacy %M = minutes; modern default is month name)
-        _m_mode = self.spark.conf.get(
-            "spark.clickhouse_arrow_spark.setting."
-            "formatdatetime_parsedatetime_m_is_month_name",
-            "1",
-        )
-        if str(_m_mode).lower() in ("0", "false"):
-            from clickhouse_arrow_spark.dialect import (
-                set_formatdatetime_m_is_month_name,
-            )
-
-            set_formatdatetime_m_is_month_name(False)
-        # session-scoped SET max_fold_group_rows = n (round-10 point-
-        # statistic fold contract; a SETTINGS tail still overrides)
-        _fold_limit = self.spark.conf.get(
-            "spark.clickhouse_arrow_spark.setting.max_fold_group_rows",
-            "",
-        )
-        if str(_fold_limit).strip().isdigit():
-            from clickhouse_arrow_spark.dialect import (
-                set_max_fold_group_rows,
-            )
-
-            set_max_fold_group_rows(int(_fold_limit))
-        sql = translate_ch_sql(ch_sql, allow_hash_substitution)
         # after translation: the replacement subqueries use Spark's own
         # range() TVF, which the CH->Spark translator must not re-touch
         sql = self._rewrite_system_tables(sql)
@@ -1948,24 +1916,12 @@ class Client:
         dfs = [self._align_to_table(self._as_df(b), table) for b in batches]
         if not dfs:
             return
-        eng = self._engine_of(table)
-        if eng == "Buffer":
-            table = self._buffer_target(table)
-            eng = self._engine_of(table)
         unioned = dfs[0]
         for d in dfs[1:]:
             unioned = unioned.unionByName(d)
-        if eng == "Join":
-            unioned = self._dedupe_join_any(table, unioned)
-        if eng != "Null":
-            from clickhouse_arrow_spark.ddl import bloom_conf_scope
-
-            with bloom_conf_scope(self.spark, table):
-                unioned.write.mode("append").insertInto(table)
-        from clickhouse_arrow_spark.matview import propagate_insert
-
-        # deferred flush = ONE block: attached views see one trigger
-        propagate_insert(self.spark, table, unioned)
+        # deferred flush = ONE block: one write job, and attached views
+        # see one trigger
+        self.insert(table, unioned, qid)
 
     def insert_batches(
         self, table: str, batches, qid: str | None = None

@@ -16,9 +16,11 @@ parametric syntax like `quantile(0.9)(x)`, and leaves everything else
 from __future__ import annotations
 
 import re
+from contextvars import ContextVar
+from dataclasses import dataclass, replace
 from typing import Callable
 
-__all__ = ["translate_ch_sql"]
+__all__ = ["DialectSettings", "translate_ch_sql"]
 
 Args = list[str]
 
@@ -739,18 +741,79 @@ _CH_DT_EXPR_SPEC = {
          "2, '0')",
 }
 
-#: statement-scoped %M reading for formatDateTime/parseDateTime.
-#: Modern CH (23.4+): %M = full month name; the legacy minutes mode is
-#: selected with SETTINGS/SET
-#: formatdatetime_parsedatetime_m_is_month_name = 0. Reset with
-#: _SPLITBY_STATE when the outermost translate returns.
-_FORMATDT_STATE = {"m_is_month_name": True}
+@dataclass(frozen=True)
+class DialectSettings:
+    """The ClickHouse settings that change what the dialect EMITS, as
+    one value per statement (the reference passes `Settings` with each
+    query, src/client.rs:213-256). Defaults are modern ClickHouse's.
+
+    - `splitby_includes_remaining`: splitBy* max_substrings keeps the
+      remainder in the last element (legacy CH, setting
+      splitby_max_substrings_includes_remaining_string = 1); modern CH
+      (>= 23.12) discards it.
+    - `m_is_month_name`: formatDateTime/parseDateTime %M is the full
+      month name (CH 23.4+); False is the legacy minutes reading
+      (formatdatetime_parsedatetime_m_is_month_name = 0).
+    - `max_fold_group_rows`: the point-statistic fold contract's
+      per-group row limit (engine extension, see _guard_fold).
+    """
+
+    splitby_includes_remaining: bool = False
+    m_is_month_name: bool = True
+    max_fold_group_rows: int = 10_000_000
 
 
-def set_formatdatetime_m_is_month_name(flag: bool) -> None:
-    """Statement-scoped override for the %M specifier reading
-    (ClickHouse setting formatdatetime_parsedatetime_m_is_month_name)."""
-    _FORMATDT_STATE["m_is_month_name"] = bool(flag)
+def _parse_flag(v: str) -> bool:
+    if v in ("1", "true"):
+        return True
+    if v in ("0", "false"):
+        return False
+    raise ValueError("needs 0, 1, true or false")
+
+
+def _parse_rows(v: str) -> int:
+    try:
+        return max(int(v), 1)
+    except ValueError:
+        raise ValueError("needs an integer row limit") from None
+
+
+#: ClickHouse setting name -> (DialectSettings field, parser of the
+#: stripped, lower-cased value; ValueError when it does not parse)
+_DIALECT_SETTINGS: dict[str, tuple[str, Callable[[str], object]]] = {
+    "splitby_max_substrings_includes_remaining_string": (
+        "splitby_includes_remaining", _parse_flag),
+    "formatdatetime_parsedatetime_m_is_month_name": (
+        "m_is_month_name", _parse_flag),
+    "max_fold_group_rows": ("max_fold_group_rows", _parse_rows),
+}
+
+#: the settings of the statement being translated: set on entry to
+#: translate_ch_sql and reset when it returns, so nested calls inherit
+#: it and no other thread or statement ever sees it
+_SETTINGS: ContextVar[DialectSettings] = ContextVar(
+    "dialect_settings", default=DialectSettings()
+)
+
+
+def session_dialect_settings(
+    conf_get: Callable[[str, str], str],
+) -> DialectSettings:
+    """The session's `SET <name> = v` values (the SET shim's namespaced
+    conf, read with `conf_get(key, default)`) as a DialectSettings. A
+    session value applies only in its plain spelling — 0/1/true/false
+    or an unsigned row count; anything else keeps the default."""
+    values = {}
+    for name, (field, parse) in _DIALECT_SETTINGS.items():
+        v = str(
+            conf_get(f"spark.clickhouse_arrow_spark.setting.{name}", "")
+        ).strip().lower()
+        if v.isdigit() or v in ("true", "false"):
+            try:
+                values[field] = parse(v)
+            except ValueError:
+                pass
+    return DialectSettings(**values)
 
 
 def _ch_dt_spec_to_java(fmt: str, fn_name: str) -> str:
@@ -771,9 +834,7 @@ def _ch_dt_spec_to_java(fmt: str, fn_name: str) -> str:
                 # modern CH default: %M = full month name; legacy
                 # minutes via formatdatetime_parsedatetime_m_is_
                 # month_name = 0 (statement/session scoped, wave 35)
-                mapped = (
-                    "MMMM" if _FORMATDT_STATE["m_is_month_name"] else "mm"
-                )
+                mapped = "MMMM" if _SETTINGS.get().m_is_month_name else "mm"
             else:
                 mapped = _CH_DT_SPEC.get(fmt[i + 1])
             if mapped is None:
@@ -7105,44 +7166,25 @@ _FORMAT_TAIL_RE = re.compile(r"(?i)\bFORMAT\s+[A-Za-z][A-Za-z0-9]*\s*;?\s*$")
 #: the lookbehind excludes `system.settings` (a table, not the clause)
 _SETTINGS_TAIL_RE = re.compile(r"(?i)(?<![.\w])SETTINGS\s+[^;]*$")
 
-#: statement-scoped splitBy* max_substrings mode. Modern ClickHouse
-#: (since ~23.12, splitby_max_substrings_includes_remaining_string = 0
-#: by default) DISCARDS everything after the first n splits;
-#: = 1 restores the legacy remainder-in-last behavior. Set per
-#: statement from the SETTINGS tail (_check_semantic_settings) or by
-#: the client from the session SET shim's namespaced conf; reset when
-#: the OUTERMOST translate_ch_sql call returns (recursion-depth
-#: counter), so it can never leak across statements.
-_SPLITBY_STATE = {"includes_remaining": False}
-_TRANSLATE_DEPTH = [0]
-
-#: round-10 (VERDICT r9 task #5): the point-statistic fold contract.
-#: Collect-fold aggregates (rankCorr, LTTB, deltaSumTimestamp,
-#: maxIntersections, entropy, intervalLengthSum, the EMA aggregate
-#: form, -Resample, sumMap/minMap/maxMap SQL folds) hold ONE array per
-#: group — the same state class ClickHouse's implementations hold —
-#: but a group that isn't human-scale silently builds an unbounded
-#: executor array. This promotes the SCALE.md prose fence to an
-#: ENFORCED contract (the ivf max_query_rows precedent): the emitted
-#: SQL size-guards the collected array and raises with the operator
-#: recipe past the limit. Default generous (10M rows per group ~ the
-#: memory CH itself would burn); SET-able per statement via
-#: `SETTINGS max_fold_group_rows = n` (engine extension, documented)
-#: or session-wide through the SET shim's namespaced conf.
-_FOLD_LIMIT_STATE = {"max_rows": 10_000_000}
-
-
-def set_max_fold_group_rows(n: int) -> None:
-    """Statement/session-scoped override for the point-statistic fold
-    group-size contract (engine extension max_fold_group_rows)."""
-    _FOLD_LIMIT_STATE["max_rows"] = max(int(n), 1)
-
-
+# round-10 (VERDICT r9 task #5): the point-statistic fold contract.
+# Collect-fold aggregates (rankCorr, LTTB, deltaSumTimestamp,
+# maxIntersections, entropy, intervalLengthSum, the EMA aggregate
+# form, -Resample, sumMap/minMap/maxMap SQL folds) hold ONE array per
+# group — the same state class ClickHouse's implementations hold —
+# but a group that isn't human-scale silently builds an unbounded
+# executor array. This promotes the SCALE.md prose fence to an
+# ENFORCED contract (the ivf max_query_rows precedent): the emitted
+# SQL size-guards the collected array and raises with the operator
+# recipe past the limit. Default generous (10M rows per group ~ the
+# memory CH itself would burn); SET-able per statement via
+# `SETTINGS max_fold_group_rows = n` (engine extension, documented)
+# or session-wide through the SET shim's namespaced conf
+# (DialectSettings.max_fold_group_rows).
 def _guard_fold(arr_expr: str, op: str) -> str:
     """Wrap a point-statistic fold's collected array with the
     group-size contract: raise_error naming the operator and the
     recipe instead of silently materializing an unbounded array."""
-    n = _FOLD_LIMIT_STATE["max_rows"]
+    n = _SETTINGS.get().max_fold_group_rows
     msg = (
         f"{op}: group exceeds max_fold_group_rows ({n}) — this is a "
         "per-group POINT STATISTIC holding one array per group; bound "
@@ -7155,23 +7197,17 @@ def _guard_fold(arr_expr: str, op: str) -> str:
     )
 
 
-def set_splitby_includes_remaining(flag: bool) -> None:
-    """Statement-scoped override for splitBy* remainder semantics
-    (ClickHouse setting splitby_max_substrings_includes_remaining_string)."""
-    _SPLITBY_STATE["includes_remaining"] = bool(flag)
-
-
 def _split_max_substrings(s: str, sep: str, n: str) -> str:
     """Emit the Spark expression for splitBy*(sep, s, max_substrings).
 
     Modern ClickHouse discards the remainder: splitByChar(',', 'a,b,,c', 2)
     = ['a','b'] — so split one extra piece, then slice it off. Spark's own
     positive split limit keeps the remainder in the last element, which is
-    CH's LEGACY mode (setting = 1), honored via _SPLITBY_STATE. n <= 0
-    means unlimited (Spark's limit 0 would drop trailing empties, so it
-    maps to -1).
+    CH's LEGACY mode (setting = 1, DialectSettings.
+    splitby_includes_remaining). n <= 0 means unlimited (Spark's limit 0
+    would drop trailing empties, so it maps to -1).
     """
-    if _SPLITBY_STATE["includes_remaining"]:
+    if _SETTINGS.get().splitby_includes_remaining:
         return f"split({s}, {sep}, IF(({n}) <= 0, -1, {n}))"
     lit = re.fullmatch(r"\s*(-?\d+)\s*", n)
     if lit:
@@ -7228,35 +7264,28 @@ _SEMANTIC_SETTINGS: dict[str, tuple[set, str]] = {
 def _check_semantic_settings(clause: str) -> bool:
     """`clause` is the text after the SETTINGS keyword; raise on any
     result-changing setting whose value differs from this engine's
-    behavior. Returns True if any setting was merely STRIPPED (so the
-    caller should warn) — honored settings don't trigger the warning."""
+    behavior. Honored settings (_DIALECT_SETTINGS) replace the
+    statement's DialectSettings. Returns True if any setting was merely
+    STRIPPED (so the caller should warn) — honored settings don't
+    trigger the warning."""
     any_stripped = False
+    values: dict[str, object] = {}
     for part in clause.split(","):
         if "=" not in part:
             continue
         k, v = part.split("=", 1)
         k = k.strip().lower()
         v = v.strip().strip("'\"").lower()
-        if k == "splitby_max_substrings_includes_remaining_string":
-            # honored, not stripped: flips splitBy* to the legacy
-            # remainder-in-last mode for THIS statement
-            _SPLITBY_STATE["includes_remaining"] = v in ("1", "true")
-            continue
-        if k == "formatdatetime_parsedatetime_m_is_month_name":
-            # honored (wave 35): %M = month name (modern default) vs
-            # the legacy minutes reading, for THIS statement
-            _FORMATDT_STATE["m_is_month_name"] = v in ("1", "true")
-            continue
-        if k == "max_fold_group_rows":
-            # honored (round-10 task #5, engine extension): the
-            # point-statistic fold group-size contract for THIS
-            # statement
+        honored = _DIALECT_SETTINGS.get(k)
+        if honored:
+            # honored, not stripped: replaces this statement's value
+            # for the rest of its translation
+            field, parse = honored
             try:
-                set_max_fold_group_rows(int(v))
-            except ValueError:
+                values[field] = parse(v)
+            except ValueError as e:
                 raise UntranslatableFunctionError(
-                    f"SETTINGS max_fold_group_rows = {v}: needs an "
-                    "integer row limit"
+                    f"SETTINGS {k} = {v}: {e}"
                 ) from None
             continue
         known = _SEMANTIC_SETTINGS.get(k)
@@ -7266,6 +7295,8 @@ def _check_semantic_settings(clause: str) -> bool:
                 f"execution: {known[1]}"
             )
         any_stripped = True
+    if values:
+        _SETTINGS.set(replace(_SETTINGS.get(), **values))
     return any_stripped
 
 
@@ -8841,23 +8872,25 @@ def _rewrite_limit_with_ties(sql: str) -> str:
     )
 
 
-def translate_ch_sql(sql: str, allow_hash_substitution: bool = False) -> str:
+def translate_ch_sql(
+    sql: str,
+    allow_hash_substitution: bool = False,
+    settings: DialectSettings | None = None,
+) -> str:
     """Entry point — see _translate_ch_sql_impl for the semantics.
 
-    Wraps the recursive translator with a depth counter so statement-
-    scoped dialect state (splitBy* remainder mode from a SETTINGS tail
-    or the session shim) resets exactly when the OUTERMOST call
-    returns and can't leak into the next statement.
+    `settings` are the statement's DialectSettings (e.g. the session's,
+    from session_dialect_settings); None inherits the enclosing
+    translation's, or the defaults at top level. A SETTINGS tail on
+    `sql` replaces them for the rest of this call only.
     """
-    _TRANSLATE_DEPTH[0] += 1
+    token = _SETTINGS.set(
+        _SETTINGS.get() if settings is None else settings
+    )
     try:
         return _translate_ch_sql_impl(sql, allow_hash_substitution)
     finally:
-        _TRANSLATE_DEPTH[0] -= 1
-        if _TRANSLATE_DEPTH[0] == 0:
-            _SPLITBY_STATE["includes_remaining"] = False
-            _FORMATDT_STATE["m_is_month_name"] = True
-            _FOLD_LIMIT_STATE["max_rows"] = 10_000_000
+        _SETTINGS.reset(token)
 
 
 def _translate_ch_sql_impl(sql: str, allow_hash_substitution: bool = False) -> str:

@@ -123,22 +123,13 @@ def synthesize_corpus(docs: DataFrame) -> DataFrame:
 
 
 def llm_corpus_pipeline(
-    spark: SparkSession, docs: DataFrame, barrier: str = "localCheckpoint"
+    spark: SparkSession, docs: DataFrame
 ) -> list[tuple[str, DataFrame]]:
     """Run the full composed pipeline; returns the ordered list of
     (stage_name, frame) with every frame persisted (each is read twice:
     by the next tier and by the summary scan). Stage frames carry
     (doc_id, text, lang, source) until the DSIR cut, after which the
-    flow is k-bounded.
-
-    ``barrier`` selects the per-tier materialization (round-13,
-    VERDICT r12 #5 measurement knob): "localCheckpoint" (default)
-    truncates lineage so no tier's analysis re-walks its
-    predecessors'; "persist" keeps lineage (persist + count) — faster
-    per-tier at small SF but re-analysis of the composed lineage grows
-    multiplicatively (the round-11 build OOM'd the driver at 1 GiB
-    during tier-6 analysis, which is why localCheckpoint is the
-    default; scripts/r13_e2e_probe.py records the measured trade)."""
+    flow is k-bounded."""
     from pyspark import StorageLevel
 
     from clickhouse_arrow_spark.operators import bloom, dedup, dsir
@@ -148,35 +139,20 @@ def llm_corpus_pipeline(
         select_token_budget,
     )
 
-    import os as _os
-    import time as _time
-
-    _timing = _os.environ.get("CAS_E2E_TIMING") == "1"
-    _t_last = [_time.perf_counter()]
-
     def keep(df: DataFrame) -> DataFrame:
         # localCheckpoint, not bare persist: each tier's ANALYZED plan
         # embeds the full lineage of every tier before it, so a 10-tier
         # composition grows the driver-side plan multiplicatively (the
         # round-11 build hit a driver OOM at 1 GiB during plan analysis
-        # of tier 6; the round-13 probe scripts/r13_e2e_probe.py showed
-        # the persist variant dying in plan-string rendering at
-        # 2^31 chars — java.lang.OutOfMemoryError: UTF16 String size —
-        # before even reaching execution). Checkpointing materializes
-        # the stage once (the summary scan needs it anyway) and
-        # restarts the lineage — the same pattern duplicate_survivors
-        # uses per CC round.
-        if barrier == "persist":
-            out = df.persist(StorageLevel.MEMORY_AND_DISK)
-            out.count()
-            return out
-        out = df.localCheckpoint(eager=True)
-        if _timing:
-            now = _time.perf_counter()
-            print(f"# e2e tier barrier: {now - _t_last[0]:.2f}s",
-                  flush=True)
-            _t_last[0] = now
-        return out
+        # of tier 6; the round-13 measurement, OPTIMIZATION_r13.md
+        # "pipe_e2e_llm_corpus barriers", showed a persist variant
+        # dying in plan-string rendering at 2^31 chars —
+        # java.lang.OutOfMemoryError: UTF16 String size — before even
+        # reaching execution). Checkpointing materializes the stage
+        # once (the summary scan needs it anyway) and restarts the
+        # lineage — the same pattern duplicate_survivors uses per CC
+        # round.
+        return df.localCheckpoint(eager=True)
 
     stages: list[tuple[str, DataFrame]] = []
     s0 = keep(synthesize_corpus(docs))

@@ -84,13 +84,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-#: (applicationId -> sf_dir) memo: every corpus query build calls
-#: register_tables, and re-reading 10 parquet footers + re-creating 10
-#: temp views per QUERY was the dominant per-query driver overhead
-#: (~0.7s/query at sf0.1 — more than executing most queries). Views
-#: persist for the session, so registration is idempotent per
-#: (session, sf_dir) and safe to skip.
-_REGISTERED: dict[str, str] = {}
+#: session conf key holding the sf_dir whose tables are registered:
+#: every corpus query build calls register_tables, and re-reading 10
+#: parquet footers + re-creating 10 temp views per QUERY was the
+#: dominant per-query driver overhead (~0.7s/query at sf0.1 — more than
+#: executing most queries). Temp views belong to one SparkSession, and
+#: so does its runtime conf: registration is idempotent per
+#: (session, sf_dir) and safe to skip, and a newSession() registers
+#: its own.
+_REGISTERED_CONF = "spark.clickhouse_arrow_spark._registered_sf_dir"
 
 
 def register_tables(
@@ -107,8 +109,11 @@ def register_tables(
     views without touching the filesystem. `force=True` re-registers
     (e.g. after `use_bucketed_tables` repointed the views and the
     caller wants the plain parquet layout back)."""
-    app = spark.sparkContext.applicationId
-    if not force and tables == TABLES and _REGISTERED.get(app) == sf_dir:
+    if (
+        not force
+        and tables == TABLES
+        and spark.conf.get(_REGISTERED_CONF, "") == sf_dir
+    ):
         return {
             name: spark.table(name)
             for name in tables
@@ -123,5 +128,5 @@ def register_tables(
         df.createOrReplaceTempView(name)
         out[name] = df
     if tables == TABLES:
-        _REGISTERED[app] = sf_dir
+        spark.conf.set(_REGISTERED_CONF, sf_dir)
     return out

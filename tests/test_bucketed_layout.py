@@ -133,3 +133,13 @@ def test_bucketed_events_sessionization_no_exchange(spark, tables, bucketed):
         from clickhouse_arrow_spark.sources import register_tables
 
         register_tables(spark, SF_DIR, force=True)
+
+
+def test_register_tables_memo_is_per_session(spark, tables):
+    """Temp views belong to one SparkSession: the registration memo must
+    not let a second session of the same application skip its own."""
+    from clickhouse_arrow_spark.sources import register_tables
+
+    other = spark.newSession()
+    register_tables(other, SF_DIR)
+    assert other.table("region").count() == spark.table("region").count()

@@ -52,12 +52,12 @@ def test_filelog_engine_roundtrip(client, spark, tmp_path):
     # the ingest table itself holds no rows (CH: Kafka tables store
     # nothing; the MVs own the data)
     assert spark.table("ing.src").count() == 0
-    # INSERT into the endpoint refuses with guidance
+    # INSERT into the endpoint refuses with guidance — batched too
+    row = spark.createDataFrame([(1, "a")], "k BIGINT, v STRING")
     with pytest.raises(SchemaError, match="consumption endpoint"):
-        client.insert(
-            "ing.src",
-            spark.createDataFrame([(1, "a")], "k BIGINT, v STRING"),
-        )
+        client.insert("ing.src", row)
+    with pytest.raises(SchemaError, match="consumption endpoint"):
+        client.insert_many("ing.src", [row, row])
     for t in ("ing.mv", "ing.tgt", "ing.src"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 

@@ -117,15 +117,44 @@ def test_ann_topk_has_no_per_query_window(spark, tables):
     # parallelism follows the corpus partitioning and the rank-limit
     # pushes below the exchange (WindowGroupLimit) — so the pin is:
     # every window partition spec must include the _pid column.
-    import re
-
     for name in ("ann_brute_force_topk", "vector_ivf_topk"):
         plan = plan_of(spark, name)
-        for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", plan):
-            assert "_pid" in spec, (
+        for parts in _window_partition_exprs(plan):
+            assert "_pid" in [p.split("#")[0] for p in parts], (
                 f"{name} has a window partitioned without the "
-                f"partition-id salt (parallelism collapse): {spec}"
+                f"partition-id salt (parallelism collapse): {parts}"
             )
+
+
+def _window_partition_exprs(plan: str) -> list[list[str]]:
+    """The PARTITION BY expressions of every windowspecdefinition(...)
+    in `plan`: its top-level arguments (parentheses balanced) before the
+    first sort order (`x ASC NULLS FIRST`) or the window frame."""
+    import re
+
+    out = []
+    for m in re.finditer(r"windowspecdefinition\(", plan):
+        args, depth, start = [], 1, m.end()
+        for i in range(m.end(), len(plan)):
+            c = plan[i]
+            if c == "(":
+                depth += 1
+            elif c == ")":
+                depth -= 1
+            if depth == 0 or (depth == 1 and c == ","):
+                args.append(plan[start:i].strip())
+                start = i + 1
+            if depth == 0:
+                break
+        parts = []
+        for a in args:
+            if re.search(r" (?:ASC|DESC) NULLS (?:FIRST|LAST)$", a) or (
+                re.match(r"(?:un)?specified\w*frame", a)
+            ):
+                break
+            parts.append(a)
+        out.append(parts)
+    return out
 
 
 def test_ivf_assign_is_single_projection(spark, tables):
